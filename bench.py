@@ -23,6 +23,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -46,10 +47,6 @@ HEADLINE = [
 
 FRONTIER_PAGES = 1_500_000   # identical leg parameters to BENCH_r03/r04
 FRONTIER_BATCHES = 3
-
-
-def _median(xs: list) -> float:
-    return sorted(xs)[len(xs) // 2]
 
 
 def burn(cpus: int) -> dict:
@@ -112,8 +109,7 @@ def run_frontier_leg(spark, pages, seeds) -> tuple[float, int]:
             spark, pages, SnapStore(tmp),
             config=FrontierConfig(max_batches=FRONTIER_BATCHES,
                                   default_budget=65536,
-                                  bloom_buckets=64, bloom_bits=1 << 21,
-                                  rescue_mode="broadcast"),
+                                  bloom_buckets=64, bloom_bits=1 << 21),
             pages_prepared=True,
         )
         t0 = time.time()
@@ -176,8 +172,8 @@ def main() -> None:
 
     spark.stop()
 
-    times = {name: _median(ts) for name, ts in q_times.items()}
-    med_leg = _median([l["sec"] for l in frontier_legs])
+    times = {name: statistics.median(ts) for name, ts in q_times.items()}
+    med_leg = statistics.median([l["sec"] for l in frontier_legs])
     times["frontier_3batches"] = round(med_leg, 3)
     total = round(sum(times.values()), 3)
     out = {

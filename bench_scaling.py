@@ -129,8 +129,7 @@ for line in sys.stdin:
                          config=FrontierConfig(max_batches=%(batches)d,
                                                default_budget=65536,
                                                bloom_buckets=64,
-                                               bloom_bits=1 << 21,
-                                               rescue_mode="broadcast"),
+                                               bloom_bits=1 << 21),
                          pages_prepared=True)
     t0 = time.time()
     manifests = eng.run(seeds)

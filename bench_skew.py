@@ -70,7 +70,7 @@ def run_leg(spark, pages, seeds, batches, n_salts, budget=1 << 20):
             config=FrontierConfig(
                 max_batches=batches, default_budget=budget,
                 bloom_buckets=64, bloom_bits=1 << 21,
-                rescue_mode="broadcast", n_salts=n_salts,
+                n_salts=n_salts,
             ),
             pages_prepared=True,
         )

@@ -129,6 +129,9 @@ def simulate_crawl(
                 "missing": len(scheduled) - found,
                 "robots_blocked": len(blocked),
                 "frontier_after": len(frontier),
+                # emitted candidates already seen: the engine's maybe-seen
+                # sliver when its filter has no false positives
+                "dupes": len(nxt) - len(frontier),
             }
         )
 

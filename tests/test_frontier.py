@@ -1,6 +1,8 @@
 """Frontier engine vs the single-process oracle simulator: crawl ordering,
 URL-seen set, robots/politeness semantics, checkpoint/exact-resume."""
 
+from contextlib import contextmanager
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -65,6 +67,26 @@ def collect_batches(store, spark, n):
         )
         out.append([(r.url, r.priority) for r in rows])
     return out
+
+
+@contextmanager
+def broadcast_threshold(spark, nbytes):
+    """Spark's broadcast budget, which the engine sizes its membership
+    placement (state bytes) and rescue plan (previous sliver bytes) by;
+    -1 forces the table placement and the shuffled rescue. Engines must be
+    built inside the block."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    if nbytes is not None:
+        spark.conf.set(key, str(nbytes))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def plans_of(manifests, key):
+    return {m["metrics"][key] for m in manifests}
 
 
 def run_engine(spark, pages_df, seeds_df, tmp_path, cfg=None, robots=None, budgets=None,
@@ -164,6 +186,58 @@ class TestCrawlOracle:
             for key in ("scheduled", "found", "missing", "frontier_after"):
                 assert m["metrics"][key] == sm[key], (key, m["metrics"], sm)
 
+    @pytest.mark.parametrize(
+        "threshold,placement", [(None, "map"), (64 << 10, "table")], ids=["map", "table"]
+    )
+    def test_sliver_matches_simulator_dupes(
+        self, spark, pages_df, pages_pdf, seeds_df, tmp_path, threshold, placement
+    ):
+        """The manifest records the placement and the maybe-seen sliver.
+        With 1 MiB of bloom state for a few hundred urls the filter has no
+        false positives, so the sliver is exactly the emitted candidates
+        already seen, which the simulator counts."""
+        cfg = FrontierConfig(max_batches=4, default_budget=4,
+                             bloom_buckets=8, bloom_bits=1 << 20)
+        with broadcast_threshold(spark, threshold):
+            store, manifests = run_engine(spark, pages_df, seeds_df, tmp_path, cfg)
+        sim = simulate_crawl(pages_pdf, seeds_list(seeds_df), default_budget=4, max_batches=4)
+        assert collect_batches(store, spark, len(manifests)) == sim.batches
+        assert plans_of(manifests, "placement") == {placement}
+        assert plans_of(manifests, "rescue") == {"broadcast"}
+        dupes = [sm["dupes"] for sm in sim.metrics]
+        assert [m["metrics"]["sliver_rows"] for m in manifests] == dupes
+        assert sum(dupes) > 0
+
+    @pytest.mark.parametrize(
+        "threshold,bits,placement", [(-1, 1 << 12, "table"), (8, 1 << 3, "map")],
+        ids=["table", "map"],
+    )
+    def test_matches_simulator_shuffle_rescue(
+        self, spark, pages_df, pages_pdf, seeds_df, tmp_path, threshold, bits, placement
+    ):
+        """The shuffled sliver rescue, on both placements: forced by a
+        broadcast budget of -1 (table), or by an 8-byte bloom that
+        saturates in batch 0, so that its sliver (every candidate) outgrows
+        an 8-byte budget from then on (map)."""
+        cfg = FrontierConfig(max_batches=4, default_budget=3,
+                             bloom_buckets=8, bloom_bits=bits)
+        with broadcast_threshold(spark, threshold):
+            store, manifests = run_engine(
+                spark, pages_df, seeds_df, tmp_path, cfg,
+                robots=make_robots_df(spark), budgets=make_budgets_df(spark),
+            )
+        sim = simulate_crawl(
+            pages_pdf, seeds_list(seeds_df),
+            robots=ROBOTS_RULES, budgets=BUDGETS,
+            default_budget=3, max_batches=4,
+        )
+        assert collect_batches(store, spark, len(manifests)) == sim.batches
+        assert plans_of(manifests, "placement") == {placement}
+        rescues = [m["metrics"]["rescue"] for m in manifests]
+        assert len(rescues) == 4 and rescues[1:] == ["shuffle"] * 3, manifests
+        seen = {r.url for r in store.read_all_scheduled(spark, 3).collect()}
+        assert seen == {u for batch in sim.batches for u, _ in batch}
+
 
 class TestResume:
     def test_exact_resume(self, spark, pages_df, pages_pdf, seeds_df, tmp_path):
@@ -247,15 +321,17 @@ class TestUrlBucketKeyFrontier:
 
 
 class TestDistributedProbe:
-    """The at-scale membership path: blob state as a distributed table +
-    co-partitioned probe join — the driver never holds blob bytes."""
+    """The at-scale membership placement: blob state as a distributed
+    table, updated and probed by one cogroup on bucket — the driver never
+    holds blob bytes. The engine picks it when the state outgrows Spark's
+    broadcast budget, so these tests shrink the budget."""
 
     def test_distributed_equals_exact(self, spark, pages_df, seeds_df, tmp_path):
         cfg_d = FrontierConfig(max_batches=3, default_budget=4, use_bloom=True,
-                               distributed_probe=True,
                                bloom_buckets=8, bloom_bits=1 << 12)
         cfg_e = FrontierConfig(max_batches=3, default_budget=4, use_bloom=False)
-        store_d, md = run_engine(spark, pages_df, seeds_df, tmp_path / "dist", cfg_d)
+        with broadcast_threshold(spark, 1 << 10):  # 4 KiB of state
+            store_d, md = run_engine(spark, pages_df, seeds_df, tmp_path / "dist", cfg_d)
         store_e, me = run_engine(spark, pages_df, seeds_df, tmp_path / "exact", cfg_e)
         assert len(md) == len(me)
         assert collect_batches(store_d, spark, len(md)) == collect_batches(
@@ -264,21 +340,24 @@ class TestDistributedProbe:
         seen_d = {r.url for r in store_d.read_all_scheduled(spark, len(md) - 1).collect()}
         seen_e = {r.url for r in store_e.read_all_scheduled(spark, len(me) - 1).collect()}
         assert seen_d == seen_e
-        # the compacted state table is checkpointed every batch
+        assert plans_of(md, "placement") == {"table"}
+        # the state table is checkpointed whole every batch
         for m in md:
-            assert "bloom_state" in m["tables"]
+            assert "bloom_state" in m["tables"] and "bloom" not in m["tables"]
 
     def test_distributed_resume(self, spark, pages_df, seeds_df, tmp_path):
-        cfg = dict(default_budget=4, use_bloom=True, distributed_probe=True,
+        cfg = dict(default_budget=4, use_bloom=True,
                    bloom_buckets=8, bloom_bits=1 << 12)
-        store, m1 = run_engine(
-            spark, pages_df, seeds_df, tmp_path / "a", FrontierConfig(max_batches=2, **cfg)
-        )
-        eng = FrontierEngine(
-            spark, pages_df, store, config=FrontierConfig(max_batches=4, **cfg)
-        )
-        m2 = eng.run(seeds_df, resume=True)
+        with broadcast_threshold(spark, -1):
+            store, m1 = run_engine(
+                spark, pages_df, seeds_df, tmp_path / "a", FrontierConfig(max_batches=2, **cfg)
+            )
+            eng = FrontierEngine(
+                spark, pages_df, store, config=FrontierConfig(max_batches=4, **cfg)
+            )
+            m2 = eng.run(seeds_df, resume=True)
         assert [m["snapshot"] for m in m2] == [2, 3]
+        assert plans_of(m1 + m2, "placement") == {"table"}
         ref_store, _ = run_engine(
             spark, pages_df, seeds_df, tmp_path / "b", FrontierConfig(max_batches=4, **cfg)
         )
@@ -288,28 +367,49 @@ class TestDistributedProbe:
         self, spark, pages_df, seeds_df, tmp_path
     ):
         """A store written with use_bloom=False resumed with use_bloom=True
-        must not crash (ADVICE r1) — membership is rebuilt from the
-        scheduled tables and the crawl ordering is unchanged."""
+        must not crash (ADVICE r1) — membership is rebuilt from the seen
+        log, on either placement, and the crawl ordering is unchanged."""
         ref_store, _ = run_engine(
             spark, pages_df, seeds_df, tmp_path / "ref",
             FrontierConfig(max_batches=4, default_budget=4, use_bloom=False),
         )
         ref = collect_batches(ref_store, spark, 4)
-        for mode in (False, True):
+        for threshold in (None, -1):
             store, _ = run_engine(
-                spark, pages_df, seeds_df, tmp_path / f"m{mode}",
+                spark, pages_df, seeds_df, tmp_path / f"m{threshold}",
                 FrontierConfig(max_batches=2, default_budget=4, use_bloom=False),
             )
-            eng = FrontierEngine(
-                spark, pages_df, store,
-                config=FrontierConfig(
-                    max_batches=4, default_budget=4, use_bloom=True,
-                    distributed_probe=mode, bloom_buckets=8, bloom_bits=1 << 12,
-                ),
-            )
-            m2 = eng.run(seeds_df, resume=True)
+            with broadcast_threshold(spark, threshold):
+                eng = FrontierEngine(
+                    spark, pages_df, store,
+                    config=FrontierConfig(
+                        max_batches=4, default_budget=4, use_bloom=True,
+                        bloom_buckets=8, bloom_bits=1 << 12,
+                    ),
+                )
+                m2 = eng.run(seeds_df, resume=True)
             assert [m["snapshot"] for m in m2] == [2, 3]
             assert collect_batches(store, spark, 4) == ref
+
+    def test_resume_across_placements(self, spark, pages_df, seeds_df, tmp_path):
+        """Resumes that change the placement (map -> table -> map -> map)
+        rebuild or reload the state and crawl exactly as one run: the
+        first map batch after a switch checkpoints a full delta, and the
+        last resume ORs only the deltas since that switch."""
+        cfg = dict(default_budget=4, bloom_buckets=8, bloom_bits=1 << 12)
+        ref_store, _ = run_engine(
+            spark, pages_df, seeds_df, tmp_path / "ref", FrontierConfig(max_batches=5, **cfg)
+        )
+        store = SnapStore(str(tmp_path / "mixed"))
+        for upto, threshold in ((2, None), (3, -1), (4, None), (5, None)):
+            with broadcast_threshold(spark, threshold):
+                eng = FrontierEngine(
+                    spark, pages_df, store, config=FrontierConfig(max_batches=upto, **cfg)
+                )
+                eng.run(seeds_df, resume=upto > 2)
+        placements = [store.manifest(k)["metrics"]["placement"] for k in range(5)]
+        assert placements == ["map", "map", "table", "map", "map"]
+        assert collect_batches(store, spark, 5) == collect_batches(ref_store, spark, 5)
 
     def test_cuckoo_resume_legacy_scheme_rebuilds(
         self, spark, pages_df, seeds_df, tmp_path
@@ -492,6 +592,19 @@ class TestRecrawl:
         assert expired <= batch2, "expired urls must be crawled again"
         assert not (kept_seen & batch2), "non-expired seen urls must stay deduped"
 
+    @pytest.mark.parametrize("backend", ["cuckoo", "bloom"])
+    def test_expired_urls_recrawl_table_shuffle(
+        self, spark, pages_df, seeds_df, tmp_path, backend
+    ):
+        """The same with no broadcast at all: both backends on the state
+        table and the shuffled sliver rescue."""
+        with broadcast_threshold(spark, -1):
+            expired, kept_seen, batch2 = self._crawl_then_expire(
+                spark, pages_df, seeds_df, tmp_path, backend
+            )
+        assert expired <= batch2, "expired urls must be crawled again"
+        assert not (kept_seen & batch2), "non-expired seen urls must stay deduped"
+
 
 class TestCuckooFrontier:
     def test_cuckoo_equals_exact(self, spark, pages_df, seeds_df, tmp_path):
@@ -509,18 +622,21 @@ class TestCuckooFrontier:
         )
         for m in mc:
             assert "cuckoo_state" in m["tables"]
+        assert plans_of(mc, "placement") == {"table"}
 
     def test_cuckoo_distributed_probe_equals_exact(
         self, spark, pages_df, seeds_df, tmp_path
     ):
-        """distributed_probe=True under the cuckoo backend: the fingerprint
-        state is probed via the co-partitioned join (never broadcast) and
-        the crawl is still batch-for-batch identical to the exact path."""
+        """The cuckoo backend with no broadcast at all (budget -1): the
+        fingerprint table is probed by the cogroup and the sliver rescued
+        by the shuffled anti-join, and the crawl is still batch-for-batch
+        identical to the exact path."""
         cfg_d = FrontierConfig(max_batches=3, default_budget=4,
-                               seen_backend="cuckoo", distributed_probe=True,
-                               bloom_buckets=8)
+                               seen_backend="cuckoo", bloom_buckets=8)
         cfg_e = FrontierConfig(max_batches=3, default_budget=4, use_bloom=False)
-        store_d, md = run_engine(spark, pages_df, seeds_df, tmp_path / "ckd", cfg_d)
+        with broadcast_threshold(spark, -1):
+            store_d, md = run_engine(spark, pages_df, seeds_df, tmp_path / "ckd", cfg_d)
+        assert plans_of(md, "rescue") == {"shuffle"}
         store_e, me = run_engine(spark, pages_df, seeds_df, tmp_path / "exd", cfg_e)
         assert len(md) == len(me)
         assert collect_batches(store_d, spark, len(md)) == collect_batches(

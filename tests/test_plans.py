@@ -190,34 +190,47 @@ def test_bucketed_corpus_join_has_single_exchange(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_pages_bucketed")
 
 
-def test_distributed_probe_copartitioned_join(spark):
-    """BloomSeenSet.probe(broadcast=False): with broadcast disabled, the
-    candidate-blob join hash-partitions BOTH sides on bucket — the blob
-    state is never collected or broadcast (the 10^10-URL membership
-    plan)."""
-    import re as _re
+def _assert_cogroup_probe(p: str) -> None:
+    """The table-side probe shape: one cogroup on bucket, no join of any
+    kind (a join would copy a blob onto every candidate row), and the
+    blob side hash-partitioned exactly once — never broadcast."""
+    assert "FlatMapCoGroupsInPandas" in p, p
+    assert "Join" not in p, p
+    assert "BroadcastExchange" not in p, p
+    blob_exchanges = [
+        b for b in _node_blocks(p, "Exchange")
+        if "blob" in b and "hashpartitioning(bucket" in b
+    ]
+    assert len(blob_exchanges) == 1, p
+    cand_exchanges = [
+        b for b in _node_blocks(p, "Exchange") if "hashpartitioning(_bucket" in b
+    ]
+    assert len(cand_exchanges) == 1, p
 
+
+def _probe_urls(spark, lo, hi):
+    return spark.range(lo, hi).select(
+        F.concat(F.lit("http://h"), (F.col("id") % 10).cast("string"),
+                 F.lit(".x/p"), F.col("id").cast("string")).alias("url")
+    )
+
+
+def _stored(spark, blobs, path):
+    """The state as the engine holds it: a checkpointed table, read back."""
+    blobs.write.parquet(str(path))
+    return spark.read.parquet(str(path))
+
+
+def test_distributed_probe_copartitioned_join(spark, tmp_path):
+    """BloomSeenSet.probe: the table placement's probe is a cogroup of
+    candidates and blob state, both hash-partitioned on bucket — the blob
+    state is never collected, broadcast or joined per row (the 10^10-URL
+    membership plan)."""
     from warc_spark.operators.seen import BloomSeenSet
 
     bloom = BloomSeenSet(n_buckets=8, m_bits=1 << 12)
-    urls = spark.range(0, 200).select(
-        F.concat(F.lit("http://h"), (F.col("id") % 10).cast("string"),
-                 F.lit(".x/p"), F.col("id").cast("string")).alias("url")
-    )
-    blobs = bloom.build_blobs(urls)
-    cands = spark.range(200, 400).select(
-        F.concat(F.lit("http://h"), (F.col("id") % 10).cast("string"),
-                 F.lit(".x/p"), F.col("id").cast("string")).alias("url")
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        p = plan_of(bloom.probe(cands, blobs, broadcast=False))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    assert "BroadcastExchange" not in p, p
-    assert "BroadcastHashJoin" not in p, p
-    exchanges = [b for b in _node_blocks(p, "Exchange") if "bucket" in b]
-    assert len(exchanges) >= 2, p  # both sides partition on the bucket key
+    blobs = _stored(spark, bloom.build_blobs(_probe_urls(spark, 0, 200)), tmp_path / "s")
+    _assert_cogroup_probe(plan_of(bloom.probe(_probe_urls(spark, 200, 400), blobs)))
 
 
 def test_decontaminate_corpus_side_broadcast_only(spark, sf_dir):
@@ -251,32 +264,15 @@ def test_pack_sequences_shuffle_is_slim(spark, sf_dir):
         assert "text" not in b, b
 
 
-def test_cuckoo_distributed_probe_copartitioned_join(spark):
-    """CuckooSeenSet.probe(broadcast=False): same placement contract as
-    bloom — the fingerprint state is hash-partitioned on bucket alongside
-    the candidates, never broadcast (the recrawl backend's tables are
-    BIGGER than bloom bitmaps, so this path matters even more)."""
+def test_cuckoo_distributed_probe_copartitioned_join(spark, tmp_path):
+    """CuckooSeenSet.probe: same cogroup shape as bloom — the recrawl
+    backend's fingerprint tables are BIGGER than bloom bitmaps, so the
+    blob crossing once per bucket matters even more."""
     from warc_spark.operators.seen import CuckooSeenSet
 
     ck = CuckooSeenSet(n_buckets=8, table_buckets=1 << 8)
-    urls = spark.range(0, 200).select(
-        F.concat(F.lit("http://h"), (F.col("id") % 10).cast("string"),
-                 F.lit(".x/p"), F.col("id").cast("string")).alias("url")
-    )
-    blobs = ck.build_blobs(urls)
-    cands = spark.range(200, 400).select(
-        F.concat(F.lit("http://h"), (F.col("id") % 10).cast("string"),
-                 F.lit(".x/p"), F.col("id").cast("string")).alias("url")
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        p = plan_of(ck.probe(cands, blobs, broadcast=False))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    assert "BroadcastExchange" not in p, p
-    assert "BroadcastHashJoin" not in p, p
-    exchanges = [b for b in _node_blocks(p, "Exchange") if "bucket" in b]
-    assert len(exchanges) >= 2, p
+    blobs = _stored(spark, ck.build_blobs(_probe_urls(spark, 0, 200)), tmp_path / "s")
+    _assert_cogroup_probe(plan_of(ck.probe(_probe_urls(spark, 200, 400), blobs)))
 
 
 def test_resolve_redirects_edges_cached_no_leak(spark, tmp_path):

@@ -4,7 +4,8 @@ equivalence of the composed path, incremental merge, cuckoo insert/delete."""
 import pytest
 from pyspark.sql import functions as F
 
-from warc_spark.operators.seen import BloomSeenSet, CuckooSeenSet, exact_new_urls
+from seen_ref import exact_new_urls, filter_new, insert_all_loop, place_all_loop
+from warc_spark.operators.seen import BloomSeenSet, CuckooSeenSet
 
 
 def urls_df(spark, ids, prefix="http://h%d.example.org/p/%d"):
@@ -39,20 +40,27 @@ class TestBloom:
     def test_composed_filter_equals_exact(self, spark, seen_urls, candidates):
         bloom = BloomSeenSet(n_buckets=8, m_bits=1 << 12)  # small -> real fpp
         blobs = bloom.build_blobs(seen_urls)
-        composed = bloom.filter_new(candidates, blobs, seen_urls)
+        composed = filter_new(bloom, candidates, blobs, seen_urls)
         exact = exact_new_urls(candidates, seen_urls)
         a = {r.url for r in composed.collect()}
         b = {r.url for r in exact.collect()}
         assert a == b and len(a) == 250
 
     def test_incremental_merge(self, spark):
+        """The OR-update: urls inserted into an existing state (buckets
+        on either side only included) probe as seen, alongside the old."""
         bloom = BloomSeenSet(n_buckets=4, m_bits=1 << 13)
         b1 = bloom.build_blobs(urls_df(spark, range(0, 100)))
-        b2 = bloom.build_blobs(urls_df(spark, range(100, 200)))
-        merged = bloom.merge_blobs(b1, b2)
+        merged = bloom.insert(b1, urls_df(spark, range(100, 200)))
+        assert merged.count() == merged.select("bucket").distinct().count()
         probed = bloom.probe(urls_df(spark, range(0, 200)), merged)
         assert probed.filter(~F.col("maybe_seen")).count() == 0
         assert merged.agg(F.sum("n_items")).first()[0] == 200
+        # bits only ever get set: the OR equals one build over both ranges
+        both = bloom.build_blobs(urls_df(spark, range(0, 200)))
+        assert {r.bucket: r.blob for r in merged.collect()} == {
+            r.bucket: r.blob for r in both.collect()
+        }
 
     def test_fpp_is_bounded(self, spark, seen_urls):
         bloom = BloomSeenSet(n_buckets=8, m_bits=1 << 16)
@@ -60,6 +68,21 @@ class TestBloom:
         fresh = urls_df(spark, range(10_000, 11_000))
         fp = bloom.probe(fresh, blobs).filter(F.col("maybe_seen")).count()
         assert fp / 1000 < 0.05
+
+
+    def test_kernels_ship_without_instance_wrappers(self, spark, seen_urls, candidates):
+        """Kernels pickle the set by value: a wrapper a caller attaches to
+        the instance (here one holding the SparkContext, which cannot be
+        pickled) must stay on the driver."""
+        bloom = BloomSeenSet(n_buckets=8, m_bits=1 << 12)
+        sc, inner = spark.sparkContext, bloom.merge_blob_map
+        bloom.merge_blob_map = lambda *a: (sc, inner(*a))[1]
+        rows = bloom.build_blobs(seen_urls).collect()
+        bc = sc.broadcast(bloom.merge_blob_map({}, rows))
+        by_map = bloom.probe_with_map(candidates, bc).filter("maybe_seen").count()
+        state = spark.createDataFrame(rows)
+        assert bloom.probe(candidates, state).filter("maybe_seen").count() == by_map >= 250
+        bc.destroy()
 
 
 class TestUrlBucketKey:
@@ -85,7 +108,7 @@ class TestUrlBucketKey:
     def test_membership_equivalence(self, spark, seen_urls, candidates):
         bloom = BloomSeenSet(n_buckets=8, m_bits=1 << 12, bucket_key="url")
         blobs = bloom.build_blobs(seen_urls)
-        composed = bloom.filter_new(candidates, blobs, seen_urls)
+        composed = filter_new(bloom, candidates, blobs, seen_urls)
         exact = exact_new_urls(candidates, seen_urls)
         assert {r.url for r in composed.collect()} == {r.url for r in exact.collect()}
 
@@ -109,7 +132,7 @@ class TestCuckoo:
         assert probed.filter(~F.col("maybe_seen")).count() == 0  # no false negatives
         # delete half and re-probe: deleted urls must no longer hit
         to_delete = urls_df(spark, range(0, 150))
-        blobs2 = ck.delete_urls(blobs, to_delete)
+        blobs2 = ck.delete(blobs, to_delete)
         still = ck.probe(to_delete, blobs2).filter(F.col("maybe_seen")).count()
         # deletion removes the fingerprint; rare same-fingerprint collisions allowed
         assert still <= 3
@@ -120,49 +143,35 @@ class TestCuckoo:
         """r4 vectorized insert (VERDICT r3 #4): same membership semantics
         as the per-item reference loop — every inserted url probes true,
         and both paths occupy exactly one slot per insert."""
-        import numpy as np
         import pandas as pd
 
         ck = CuckooSeenSet(table_buckets=1 << 12)
         urls = pd.Series(
             ["http://h%d.example.org/p/%d" % (i % 50, i) for i in range(9000)]
         )
-        tv, tl = ck._empty_table(), ck._empty_table()
-        assert ck._insert_all(tv, urls) == 9000
-        assert ck._insert_all_loop(tl, urls) == 9000
+        tv, tl = ck._empty(), ck._empty()
+        assert ck._add(tv, urls) == 9000
+        assert insert_all_loop(ck, tl, urls) == 9000
         assert (tv != 0).sum() == (tl != 0).sum() == 9000
         for table in (tv, tl):
-            fps = ck._fingerprint(urls)
-            idxs = ck._index(urls)
-            alts = ck._alt_index(idxs, fps)
-            hit = (table[idxs] == fps[:, None]).any(axis=1) | (
-                (table[alts] == fps[:, None]).any(axis=1)
-            )
-            assert hit.all()
+            assert ck._test(table, urls).all()
 
     def test_vectorized_insert_fills_scattered_holes(self):
         """Placement must use the rank-th EMPTY slot, not the rank-th slot:
         carve non-contiguous holes (delete pattern) and re-insert."""
-        import numpy as np
         import pandas as pd
 
         ck = CuckooSeenSet(table_buckets=1 << 8)
-        table = ck._empty_table()
+        table = ck._empty()
         u1 = pd.Series(["http://a.example.org/x/%d" % i for i in range(700)])
-        ck._insert_all(table, u1)
+        ck._add(table, u1)
         # knock out the middle two slots of every bucket -> scattered holes
         survivors = (table != 0).sum() - (table[:, 1:3] != 0).sum()
         table[:, 1:3] = 0
         u2 = pd.Series(["http://b.example.org/y/%d" % i for i in range(400)])
-        ck._insert_all(table, u2)
+        ck._add(table, u2)
         assert (table != 0).sum() == survivors + 400
-        fps = ck._fingerprint(u2)
-        idxs = ck._index(u2)
-        alts = ck._alt_index(idxs, fps)
-        hit = (table[idxs] == fps[:, None]).any(axis=1) | (
-            (table[alts] == fps[:, None]).any(axis=1)
-        )
-        assert hit.all()
+        assert ck._test(table, u2).all()
 
     def test_vectorized_insert_speedup(self):
         """The placement kernel (what r3 #4 vectorizes — hashing was
@@ -178,8 +187,8 @@ class TestCuckoo:
             ["http://h%d.example.org/path/%d" % (i % 997, i) for i in range(1_000_000)]
         )
         fps, idxs = ck._hash_fp_idx(urls)
-        ck._place_all(ck._empty_table(), fps[:1000], idxs[:1000])  # warm
-        ck._place_all_loop(ck._empty_table(), fps[:1000], idxs[:1000])
+        ck._place_all(ck._empty(), fps[:1000], idxs[:1000])  # warm
+        place_all_loop(ck, ck._empty(), fps[:1000], idxs[:1000])
 
         def best_of(fn, n):
             # min-of-n: robust to concurrent-load noise (suite shares the
@@ -187,12 +196,77 @@ class TestCuckoo:
             times = []
             for _ in range(n):
                 t0 = time.perf_counter()
-                fn(ck._empty_table(), fps, idxs)
+                fn(ck._empty(), fps, idxs)
                 times.append(time.perf_counter() - t0)
             return min(times)
 
         vec = best_of(ck._place_all, 5)
-        loop = best_of(ck._place_all_loop, 2)
+        loop = best_of(lambda *a: place_all_loop(ck, *a), 2)
         # 3x floor (measured ~10x in isolation): drift-safe under
         # concurrent full-suite Spark load (VERDICT r4 #2)
         assert loop / vec >= 3, (loop, vec)
+
+
+_SIZE_UNITS = {"B": 1, "KiB": 1 << 10, "MiB": 1 << 20, "GiB": 1 << 30}
+
+
+def python_bytes_sent(spark, action) -> float:
+    """Bytes the SQL executions of ``action()`` sent to Python workers,
+    from the status store's ``data sent to Python workers`` metric."""
+    import re
+
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def execution_ids():
+        execs = store.executionsList()
+        return {execs.apply(i).executionId() for i in range(execs.size())}
+
+    before = execution_ids()
+    action()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    total, counted = 0.0, set()
+    for eid in execution_ids() - before:
+        values = store.executionMetrics(eid)
+        metrics = store.execution(eid).get().metrics()
+        for i in range(metrics.size()):
+            m = metrics.apply(i)
+            # AQE re-plans list one accumulator under several plan nodes
+            if m.name() != "data sent to Python workers" or m.accumulatorId() in counted:
+                continue
+            counted.add(m.accumulatorId())
+            v = values.get(m.accumulatorId())
+            if v.isDefined():
+                # "<total>" alone, or "total (min, med, max ...)\n<total> (...)"
+                num, unit = re.match(
+                    r"([\d.]+) (B|KiB|MiB|GiB)", v.get().split("\n")[-1]
+                ).groups()
+                total += float(num) * _SIZE_UNITS[unit]
+    return total
+
+
+class TestTableProbeBytes:
+    def test_probe_sends_each_blob_once(self, spark, tmp_path):
+        """A table-placement probe of N candidates over B buckets sends
+        about N x url bytes + B x blob bytes to Python: each blob crosses
+        once per bucket, never once per candidate row (a join-then-group
+        probe sends N x blob bytes — here ~200x the bound)."""
+        n, n_buckets, m_bits = 20_000, 16, 1 << 16
+
+        def urls(lo, hi):
+            return spark.range(lo, hi).select(
+                F.concat(F.lit("http://h"), (F.col("id") % 97).cast("string"),
+                         F.lit(".example.org/p/"), F.col("id").cast("string")).alias("url")
+            )
+
+        bloom = BloomSeenSet(n_buckets=n_buckets, m_bits=m_bits)
+        bloom.build_blobs(urls(0, 30_000)).write.parquet(str(tmp_path / "state"))
+        state = spark.read.parquet(str(tmp_path / "state"))
+        cands = urls(20_000, 20_000 + n)
+        url_bytes = cands.select(F.sum(F.octet_length("url"))).first()[0]
+        sent = python_bytes_sent(
+            spark,
+            lambda: bloom.probe(cands, state).write.format("noop").mode("overwrite").save(),
+        )
+        bound = url_bytes + n_buckets * m_bits // 8
+        # Arrow framing plus the int bucket key: ~25% over the bound here
+        assert 0 < sent <= 1.5 * bound, (sent, bound)

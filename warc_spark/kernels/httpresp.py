@@ -147,11 +147,14 @@ def dechunk(body: bytes) -> bytes:
 
 def decode_body(body: bytes | None, te: str | None, ce: str | None) -> tuple[bytes | None, bool]:
     """Reverse the wire encodings on a split body: chunked transfer framing
-    first, then gzip/x-gzip/deflate content coding. Lenient: any malformed
-    layer keeps the bytes as-is and reports decoded=False — one bad
-    record never fails a task. ``identity`` / unknown codings pass
-    through untouched (decoded reflects whether EVERY declared layer was
-    reversed)."""
+    first, then gzip/x-gzip/deflate content coding. Lenient: decoding
+    stops at the first layer that is malformed or of an unknown coding
+    (br/zstd) and reports decoded=False — one bad record never fails a
+    task. With decoded=False the returned bytes are NOT necessarily the
+    original body: they reflect every layer already reversed before the
+    stop (chunk framing removed, outer codings undone), with the failing
+    layer and everything under it left as they were. ``identity`` layers
+    are no-ops; decoded=True means EVERY declared layer was reversed."""
     if body is None:
         return None, False
     applied = True

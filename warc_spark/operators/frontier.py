@@ -18,12 +18,10 @@ tests/oracle_sim.py replicates exactly):
                   corpus); links extracted from html
 5. next frontier: politeness-deferred ∪ extracted links (priority =
                   parent*decay, max-merged per url), minus seen — realized
-                  as a Bloom prefilter (broadcast blob map, zero shuffle)
-                  plus an exact rescue of the maybe-seen sliver via a
-                  *broadcast semi-join flip* (the big seen table is only
-                  scanned, never shuffled); with use_bloom=False it is the
-                  plain exact left_anti (the correctness oracle path)
-6. checkpoint   : scheduled/frontier/bloom written, manifest committed
+                  as a membership prefilter plus an exact rescue of the
+                  maybe-seen sliver; with use_bloom=False it is the plain
+                  exact left_anti (the correctness oracle path)
+6. checkpoint   : scheduled/frontier/seen state written, manifest committed
 
 Physical design for scale (what the judge should look at):
 - the pages corpus is hash-partitioned AND sorted by url once at engine
@@ -33,10 +31,18 @@ Physical design for scale (what the judge should look at):
 - robots flag + politeness rank are computed as *columns* on persisted
   frames, so allowed/blocked/scheduled/deferred all come from one pass —
   no anti-joins, no plan re-execution;
-- the Bloom state is built/merged distributed (applyInPandas per host-hash
-  bucket) and checkpointed as a table; probing uses a broadcast of the blob
-  map while it is broadcast-sized (sandbox / small cluster) and the
-  co-partitioned ``BloomSeenSet.probe`` join at 10^10-URL scale;
+- the engine picks the membership placement itself from sizes it can
+  see: while the whole bloom state (``bloom_buckets * bloom_bits / 8``
+  bytes) fits Spark's ``spark.sql.autoBroadcastJoinThreshold``, the
+  driver ORs each batch's blob delta into a map that is broadcast to the
+  probe (zero shuffle of the candidates); otherwise — and always for the
+  cuckoo backend — the state stays a distributed table, updated and probed
+  by one cogroup on bucket (operators/seen.py), checkpointed per batch;
+- the maybe-seen sliver is rescued by a *broadcast semi-join flip* (the
+  big seen table is only scanned, never shuffled) while the previous
+  batch's observed sliver fits the same threshold, else by a shuffled
+  anti-join of the sliver alone; the sliver size rides the frontier write
+  (``df.observe``), so choosing the plan costs no job;
 - metrics come from in-memory aggregations over the persisted per-batch
   frames — no extra full-plan executions.
 
@@ -49,10 +55,13 @@ north_rule).
 
 from __future__ import annotations
 
+import os
+import shutil
 import time
 from dataclasses import dataclass
 from typing import Any
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -60,7 +69,7 @@ from ..plans.snapstore import SnapStore
 from .politeness import flag_politeness
 from .priority import salted_priority_order
 from .robots import flag_robots, url_host
-from .seen import BloomSeenSet
+from .seen import STATE_SCHEMA, BloomSeenSet, CuckooSeenSet
 
 
 @dataclass
@@ -72,23 +81,12 @@ class FrontierConfig:
     use_bloom: bool = True
     bloom_buckets: int = 32
     bloom_bits: int = 1 << 16
-    # membership-state placement: False = driver-collected broadcast map
-    # (fast while total blob bytes are broadcast-sized); True = the blob
-    # state stays a DISTRIBUTED table, probed via a co-partitioned join
-    # (BloomSeenSet.probe / CuckooSeenSet.probe, broadcast=False) and
-    # checkpointed compacted as ``bloom_state``/``cuckoo_state`` — at
-    # 10^10 URLs (~16 GB of bloom blobs, more for cuckoo fingerprints)
-    # the state cannot live on the driver or broadcast to every task, so
-    # this is the at-scale configuration for BOTH backends; crawl ordering
-    # and seen set are identical either way
-    # (tests/test_frontier.py::TestDistributedProbe, TestCuckooFrontier).
-    distributed_probe: bool = False
-    # membership filter: "bloom" (append-only, broadcast-map or distributed
-    # probe) or "cuckoo" (deletion-capable — the E5 recrawl path: state is
-    # a distributed fingerprint table, expire_urls() deletes from it).
-    # Either way the maybe-seen sliver is resolved EXACTLY, so expiry is
-    # correct even under bloom (the stale bit costs a rescue lookup, never
-    # a wrong drop).
+    # membership filter: "bloom" (append-only; broadcast map or table, by
+    # state size) or "cuckoo" (deletion-capable — the E5 recrawl path: state
+    # is always a distributed fingerprint table, expire_urls() deletes from
+    # it). Either way the maybe-seen sliver is resolved EXACTLY, so expiry
+    # is correct even under bloom (the stale bit costs a rescue lookup,
+    # never a wrong drop).
     seen_backend: str = "bloom"
     # membership bucket key: "host" co-locates a host's urls with its blob
     # (the default layout); "url" spreads buckets uniformly under ANY host
@@ -108,15 +106,6 @@ class FrontierConfig:
     # crawl-ordering oracle would otherwise hide the no-op)
     normalize_links: bool = False
     min_priority: float = 1e-6
-    # emit-side dedup: if the maybe-seen sliver has at most this many rows,
-    # resolve it via the broadcast semi-join flip (seen set scan-only);
-    # above it, shuffled anti-join of the sliver (AQE-style runtime choice)
-    rescue_broadcast_rows: int = 200_000
-    # "auto" counts the sliver (one extra job) to pick the rescue plan;
-    # "broadcast"/"shuffle" force a plan and skip the count — at steady
-    # state the operator knows its dupe profile, and dropping the count
-    # removes one of the per-batch fixed-cost jobs (VERDICT r1 #8)
-    rescue_mode: str = "auto"
     # compact the seen-url log every N batches (LSM-style): the rescue-base
     # read opens O(N) parquet dirs per batch instead of O(#batches); 0
     # disables compaction
@@ -197,35 +186,47 @@ class FrontierEngine:
             n_buckets=self.cfg.bloom_buckets, m_bits=self.cfg.bloom_bits,
             bucket_key=self.cfg.bloom_bucket_key,
         )
-        from .seen import CuckooSeenSet
-
         self.cuckoo = CuckooSeenSet(
             n_buckets=self.cfg.bloom_buckets,
             bucket_key=self.cfg.bloom_bucket_key,
         )
+        # Spark's own broadcast budget sizes both membership decisions: the
+        # state placement (fixed per engine) and each batch's rescue plan
+        self._broadcast_bytes = (
+            spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        )
+        state_bytes = self.cfg.bloom_buckets * self.cfg.bloom_bits // 8
+        if not self.cfg.use_bloom:
+            self.placement = None
+        elif self.cfg.seen_backend == "bloom" and state_bytes <= self._broadcast_bytes:
+            self.placement = "map"  # driver-held blob map, broadcast to the probe
+        else:
+            self.placement = "table"  # distributed state table, cogroup on bucket
+        self._seen = self.cuckoo if self.cfg.seen_backend == "cuckoo" else self.bloom
+        self._blob_map: dict[int, bytes] = {}
         self._blob_bc = None  # broadcast of the driver blob map
-        self._blobs_state = None  # distributed state DF (distributed/cuckoo)
+        self._state = None  # the state table
+        self._rebuild = None  # seen log the first state update folds in
+        self._sliver_bytes = 0  # the previous batch's maybe-seen url bytes
 
     # -- state helpers ------------------------------------------------------
     def _with_host(self, df: DataFrame) -> DataFrame:
         return df.withColumn("host", url_host(F.col("url")))
-
-    def _rebroadcast(self, blob_map: dict[int, bytes]) -> None:
-        if self._blob_bc is not None:
-            self._blob_bc.destroy()
-        self._blob_bc = self.spark.sparkContext.broadcast(blob_map)
 
     def run(self, seeds: DataFrame, resume: bool = False) -> list[dict]:
         """Run the crawl (optionally resuming from the last committed
         snapshot). Returns the list of batch manifests."""
         cfg = self.cfg
         last = self.store.latest() if resume else None
-        blob_map: dict[int, bytes] = {}
+        if cfg.use_bloom:
+            self._open_seen_state(last)
+        self._sliver_bytes = 0
         if last is not None:
             start = last + 1
             frontier = self.store.read_df(self.spark, last, "frontier")
-            if cfg.use_bloom:
-                blob_map = self._resume_bloom_state(last)
+            self._sliver_bytes = (
+                self.store.manifest(last)["metrics"].get("sliver_bytes") or 0
+            )
             if seeds is not None:
                 # continuous re-seeding: inject fresh seeds into the
                 # restored frontier, minus everything already crawled —
@@ -255,10 +256,9 @@ class FrontierEngine:
 
         manifests: list[dict] = []
         for batch in range(start, cfg.max_batches):
-            result = self._run_batch(batch, frontier, blob_map)
-            if result is None:
+            manifest = self._run_batch(batch, frontier)
+            if manifest is None:
                 break
-            manifest, blob_map = result
             manifests.append(manifest)
             # read the checkpoint back for the next iteration: truncates
             # the logical plan (no lineage growth across batches) and is
@@ -267,9 +267,9 @@ class FrontierEngine:
         if self._blob_bc is not None:
             self._blob_bc.destroy()
             self._blob_bc = None
-        if self._blobs_state is not None:
-            self._blobs_state.unpersist()
-            self._blobs_state = None
+        if self._state is not None:
+            self._state.unpersist()
+            self._state = None
         return manifests
 
     def expire_urls(self, urls: DataFrame) -> None:
@@ -282,127 +282,93 @@ class FrontierEngine:
         costs a rescue lookup until the blobs are rebuilt)."""
         last = self.store.latest()
         self.store.expire_seen(self.spark, urls)
-        if self.cfg.seen_backend == "cuckoo" and last is not None:
-            import os as _os
+        if (
+            self.cfg.seen_backend == "cuckoo"
+            and last is not None
+            and self._loadable(self.store.manifest(last))
+        ):
+            # a state a resume would not load (other scheme or placement)
+            # is left as it is: the resume rebuilds from the expired log
+            state_path = os.path.join(self.store.batch_dir(last), "cuckoo_state")
+            updated = self.cuckoo.delete(self.spark.read.parquet(state_path), urls)
+            # write-then-replace through a sibling dir (write_df would
+            # truncate the dir we are still lazily reading from)
+            self.store.write_df(updated, last, "cuckoo_state_expired")
+            shutil.rmtree(state_path)
+            os.rename(state_path + "_expired", state_path)
 
-            state_path = _os.path.join(self.store.batch_dir(last), "cuckoo_state")
-            stored_scheme = self.store.manifest(last).get("config", {}).get(
-                "cuckoo_hash_scheme"
-            )
-            if stored_scheme != self.cuckoo.HASH_SCHEME:
-                # blobs written under a different bucket derivation:
-                # deleting through the current scheme would corrupt live
-                # entries. Leave the file; a resume rebuilds the blobs from
-                # the (already-expired) seen log on the same mismatch.
-                pass
-            elif _os.path.exists(state_path):
-                state = self.spark.read.parquet(state_path)
-                updated = self.cuckoo.delete_urls(state, urls)
-                # write-then-replace through a sibling dir (write_df would
-                # truncate the dir we are still lazily reading from)
-                self.store.write_df(updated, last, "cuckoo_state_expired")
-                import shutil as _shutil
+    def _loadable(self, manifest: dict) -> bool:
+        """The stored membership state is usable as is: same backend, same
+        placement and the same cuckoo bucket-derivation stamp (ADVICE r4:
+        fingerprints of a legacy scheme probe the wrong buckets)."""
+        stored = manifest.get("config", {})
+        return (
+            stored.get("use_bloom", False)
+            and stored.get("seen_backend", "bloom") == self.cfg.seen_backend
+            and manifest["metrics"].get("placement") == self.placement
+            and stored.get("cuckoo_hash_scheme") == self.cuckoo.HASH_SCHEME
+        )
 
-                _shutil.rmtree(state_path)
-                _os.rename(state_path + "_expired", state_path)
-        if self._blobs_state is not None:
-            self._blobs_state.unpersist()
-            self._blobs_state = None
+    def _open_seen_state(self, last: int | None) -> None:
+        """Restore the membership state a resume continues from.
 
-    def _resume_bloom_state(self, last: int) -> dict[int, bytes]:
-        """Restore the membership state for a resume, validating the stored
-        config against the resuming one (ADVICE r1: a --no-bloom store
-        resumed with use_bloom=True used to die on a raw path-not-found).
-
-        - stored-with-bloom + matching params: OR-merge the checkpointed
-          deltas — into the driver map (broadcast path) or a distributed
-          compaction (distributed_probe).
-        - stored WITHOUT bloom: rebuild the blobs from the scheduled tables
-          (robots-blocked urls of past batches are not in them; such urls
-          may transiently re-enter the frontier but are re-dropped by the
-          robots gate, so the scheduled set/ordering is unchanged).
-        - mismatched bloom geometry: fail clearly — blobs are not
-          compatible across (n_buckets, m_bits).
+        1. Same backend as the checkpoint: validate the geometry and fail
+           clearly on a mismatch — blobs are not compatible across
+           (n_buckets, m_bits, bucket key).
+        2. Load the stored state when ``_loadable``; otherwise (no bloom,
+           other backend, other placement, legacy cuckoo scheme) the first
+           batch's state update folds in the exact seen log, so the state
+           is rebuilt before its first probe. The log holds scheduled urls
+           only: a url robots-blocked in a past batch may re-enter the
+           frontier and is dropped again by the robots gate, so the
+           scheduled set and ordering are unchanged.
         """
-        import os as _os
-
         cfg = self.cfg
-        stored = self.store.manifest(last).get("config", {})
-        if cfg.seen_backend == "cuckoo":
-            if stored.get("use_bloom", False) and stored.get("seen_backend") == "cuckoo":
-                for key in ("bloom_buckets", "bloom_bucket_key"):
-                    if stored.get(key, getattr(cfg, key)) != getattr(cfg, key):
-                        raise ValueError(
-                            "cannot resume: cuckoo state was written with "
-                            f"{key}={stored.get(key)} but this engine uses "
-                            f"{getattr(cfg, key)}"
-                        )
-                if stored.get("cuckoo_hash_scheme") == self.cuckoo.HASH_SCHEME:
-                    self._blobs_state = self.store.read_df(
-                        self.spark, last, "cuckoo_state"
-                    ).persist()
-                else:
-                    # bucket derivation changed since (or manifest predates
-                    # the stamp): the stored blobs probe the wrong buckets
-                    # under the current scheme — rebuild from the exact
-                    # seen log instead (ADVICE r4)
-                    self._blobs_state = self.cuckoo.build_blobs(
-                        self.store.read_seen_urls(self.spark, last)
-                    ).persist()
-            else:
-                self._blobs_state = self.cuckoo.build_blobs(
-                    self.store.read_seen_urls(self.spark, last)
-                ).persist()
-            return {}
-        if stored.get("use_bloom", False) and stored.get("seen_backend", "bloom") != "bloom":
-            # store holds cuckoo state; rebuild bloom from the seen log
-            return self.bloom.merge_blob_map(
-                {},
-                self.bloom.build_blobs(
-                    self.store.read_seen_urls(self.spark, last)
-                ).collect(),
-            )
-        if stored.get("use_bloom", False):
+        self._blob_map, self._rebuild = {}, None
+        if self.placement == "table":
+            self._state = self.spark.createDataFrame([], STATE_SCHEMA)
+        if last is None:
+            return
+        manifest = self.store.manifest(last)
+        stored = manifest.get("config", {})
+        if stored.get("use_bloom", False) and stored.get("seen_backend", "bloom") == cfg.seen_backend:
             # a pre-upgrade checkpoint has no bloom_bucket_key in its
             # manifest — those blobs were written host-keyed, so validate
             # against the legacy value instead of skipping the check
             # (ADVICE r3: resuming with --bucket-key url against host-keyed
-            # blobs silently yields bloom false negatives)
+            # blobs silently yields false negatives)
             legacy = {"bloom_bucket_key": "host"}
-            for key in ("bloom_buckets", "bloom_bits", "bloom_bucket_key"):
+            keys = ("bloom_buckets", "bloom_bucket_key")
+            if cfg.seen_backend == "bloom":
+                keys += ("bloom_bits",)
+            for key in keys:
                 stored_val = stored.get(key, legacy.get(key, getattr(cfg, key)))
                 if stored_val != getattr(cfg, key):
                     raise ValueError(
-                        f"cannot resume: checkpoint was written with "
-                        f"{key}={stored_val} but this engine is configured "
-                        f"with {key}={getattr(cfg, key)}; bloom blobs are "
-                        f"not compatible across geometries — rerun with the "
-                        f"stored geometry or use_bloom=False"
+                        f"cannot resume: the {cfg.seen_backend} state was "
+                        f"written with {key}={stored_val} but this engine is "
+                        f"configured with {key}={getattr(cfg, key)}; rerun "
+                        f"with the stored geometry or use_bloom=False"
                     )
-            paths = [
-                _os.path.join(self.store.batch_dir(k), "bloom")
-                for k in range(last + 1)
-            ]
-            deltas = self.spark.read.parquet(*paths)
-            if cfg.distributed_probe:
-                self._blobs_state = self.bloom.compact(deltas).persist()
-                return {}
-            return self.bloom.merge_blob_map({}, deltas.collect())
-        # store has no bloom dirs: rebuild membership from what was crawled
-        rebuilt = self.bloom.build_blobs(
-            self.store.read_all_scheduled(self.spark, last).select("url")
-        )
-        if cfg.distributed_probe:
-            self._blobs_state = rebuilt.persist()
-            return {}
-        return self.bloom.merge_blob_map({}, rebuilt.collect())
+        if not self._loadable(manifest):
+            self._rebuild = self.store.read_seen_urls(self.spark, last)
+        elif self.placement == "table":
+            self._state = self.store.read_df(
+                self.spark, last, f"{cfg.seen_backend}_state"
+            ).persist()
+        else:
+            # the map is the OR of the deltas since the map placement began
+            # (its first delta folded in everything seen before it)
+            paths = []
+            k = last
+            while k >= 0 and self.store.manifest(k)["metrics"].get("placement") == "map":
+                paths.append(os.path.join(self.store.batch_dir(k), "bloom"))
+                k -= 1
+            self._blob_map = self.bloom.merge_blob_map(
+                {}, self.spark.read.parquet(*paths).collect()
+            )
 
-    def _run_batch(
-        self,
-        batch: int,
-        frontier: DataFrame,
-        blob_map: dict[int, bytes],
-    ) -> tuple[dict, dict[int, bytes]] | None:
+    def _run_batch(self, batch: int, frontier: DataFrame) -> dict | None:
         cfg = self.cfg
         t0 = time.time()
         phases: dict[str, float] = {}
@@ -507,60 +473,39 @@ class FrontierEngine:
         if blocked_df is not None:
             retired = retired.unionByName(blocked_df)
 
-        # 6a. seen-set state FIRST (the emit-side dedup probes it): build
-        # this batch's blobs distributed and checkpoint them as a DELTA
-        # (Iceberg append-style — state at batch k = OR of deltas 0..k;
-        # merge_blobs is the distributed compaction for the at-scale probe
-        # path). The driver map accumulates the same OR for the broadcast
-        # probe while total blob bytes are broadcast-sized.
+        # 6a. seen-set state FIRST (the emit-side dedup probes it). Map
+        # placement: build this batch's blobs distributed, checkpoint them
+        # as a DELTA (Iceberg append-style — state at batch k = OR of the
+        # deltas) and OR them into the driver map. Table placement: one
+        # cogroup inserts the urls into the state table, which is
+        # checkpointed whole and read back (truncates lineage — same
+        # pattern as the frontier table); the driver never holds blob bytes.
         tables = {"scheduled": sched_info}
-        if cfg.use_bloom and cfg.seen_backend == "cuckoo":
-            # deletion-capable membership: one distributed fingerprint
-            # table, urls inserted incrementally, checkpointed per batch
-            # (same read-back lineage truncation as the bloom state)
-            state = (
-                self.cuckoo.build_blobs(retired)
-                if self._blobs_state is None
-                else self.cuckoo.insert_urls(self._blobs_state, retired)
-            )
-            tables["cuckoo_state"] = self.store.write_df(state, batch, "cuckoo_state")
-            if self._blobs_state is not None:
-                self._blobs_state.unpersist()
-            self._blobs_state = self.store.read_df(
-                self.spark, batch, "cuckoo_state"
-            ).persist()
-        elif cfg.use_bloom:
-            if cfg.distributed_probe:
-                new_blobs = self.bloom.build_blobs(retired).persist()
-                tables["bloom"] = self.store.write_df(new_blobs, batch, "bloom")
-                # state stays a distributed table: OR-merge the delta in,
-                # checkpoint the compacted state, read it back (truncates
-                # lineage — same pattern as the frontier table). The driver
-                # never holds blob bytes.
-                state = (
-                    new_blobs
-                    if self._blobs_state is None
-                    else self.bloom.merge_blobs(self._blobs_state, new_blobs)
-                )
-                tables["bloom_state"] = self.store.write_df(
-                    state, batch, "bloom_state"
-                )
-                if self._blobs_state is not None:
-                    self._blobs_state.unpersist()
-                self._blobs_state = self.store.read_df(
-                    self.spark, batch, "bloom_state"
-                ).persist()
-                new_blobs.unpersist()
-            else:
+        if cfg.use_bloom:
+            urls = retired
+            if self._rebuild is not None:
+                urls = retired.unionByName(self._rebuild)
+                self._rebuild = None
+            if self.placement == "map":
                 # one job: write the delta; the driver-side OR-merge reads
                 # the just-written (≤ n_buckets rows) parquet directly with
                 # pyarrow — no second Spark job for the collect (r1 #8)
-                new_blobs = self.bloom.build_blobs(retired)
-                tables["bloom"] = self.store.write_df(new_blobs, batch, "bloom")
-                blob_map = self.bloom.merge_blob_map(
-                    blob_map, _read_blob_rows(tables["bloom"]["path"])
+                tables["bloom"] = self.store.write_df(
+                    self.bloom.build_blobs(urls), batch, "bloom"
                 )
-                self._rebroadcast(blob_map)
+                self._blob_map = self.bloom.merge_blob_map(
+                    self._blob_map, _read_blob_rows(tables["bloom"]["path"])
+                )
+                if self._blob_bc is not None:
+                    self._blob_bc.destroy()
+                self._blob_bc = self.spark.sparkContext.broadcast(self._blob_map)
+            else:
+                name = f"{cfg.seen_backend}_state"
+                tables[name] = self.store.write_df(
+                    self._seen.insert(self._state, urls), batch, name
+                )
+                self._state.unpersist()
+                self._state = self.store.read_df(self.spark, batch, name).persist()
         _mark("bloom_state", _t)
 
         # 5. next frontier = deferred ∪ new links, max-merged, minus seen.
@@ -595,38 +540,30 @@ class FrontierEngine:
         rescue_base = self.store.read_seen_urls(self.spark, batch)
         if blocked_df is not None:
             rescue_base = rescue_base.unionByName(blocked_df)
-        probed = None
+        probed = sliver_obs = rescue = None
         if cfg.use_bloom:
-            # Bloom prefilter: definitely-new urls pass with no exact join;
-            # only the maybe-seen sliver (true dupes + ~fpp false positives)
-            # needs exact membership. Broadcast-map path = zero shuffle of
-            # the candidates; distributed path = co-partitioned join on
-            # bucket (the state never collects to one node).
-            if cfg.seen_backend == "cuckoo":
-                probed = self.cuckoo.probe(
-                    merged_cands,
-                    self._blobs_state,
-                    broadcast=not cfg.distributed_probe,
-                ).persist()
-            elif cfg.distributed_probe:
-                probed = self.bloom.probe(
-                    merged_cands, self._blobs_state, broadcast=False
-                ).persist()
+            # membership prefilter: definitely-new urls pass with no exact
+            # join; only the maybe-seen sliver (true dupes + ~fpp false
+            # positives) needs exact membership. Its size rides the
+            # frontier write and picks the NEXT batch's rescue plan.
+            if self.placement == "map":
+                probed = self.bloom.probe_with_map(merged_cands, self._blob_bc)
             else:
-                probed = self.bloom.probe_with_map(
-                    merged_cands, self._blob_bc
-                ).persist()
+                probed = self._seen.probe(merged_cands, self._state)
+            sliver_obs = Observation(f"sliver_{batch}")
+            probed = probed.observe(
+                sliver_obs,
+                F.count_if("maybe_seen").alias("rows"),
+                F.sum(F.when(F.col("maybe_seen"), F.octet_length("url"))).alias("bytes"),
+            ).persist()
             sliver = probed.filter(F.col("maybe_seen"))
-            if cfg.rescue_mode == "auto":
-                use_broadcast_rescue = sliver.count() <= cfg.rescue_broadcast_rows
-            else:
-                use_broadcast_rescue = cfg.rescue_mode == "broadcast"
-            if use_broadcast_rescue:
+            if self._sliver_bytes <= self._broadcast_bytes:
                 # sliver is small (the 10^10-scale shape: seen is enormous,
                 # dupes per batch modest) — resolve it WITHOUT shuffling or
                 # even anti-joining the seen set:
                 #   hits   = seen ⋉ broadcast(sliver)   (scan-only semi join)
                 #   result = probed ▷ broadcast(hits)   (broadcast anti join)
+                rescue = "broadcast"
                 hits = rescue_base.join(
                     F.broadcast(sliver.select("url")), "url", "left_semi"
                 )
@@ -636,6 +573,7 @@ class FrontierEngine:
             else:
                 # dupe-heavy batch: shuffled anti-join, but only for the
                 # sliver — the definitely-new majority still skips the join
+                rescue = "shuffle"
                 next_frontier = (
                     probed.filter(~F.col("maybe_seen"))
                     .unionByName(sliver.join(rescue_base, "url", "left_anti"))
@@ -647,6 +585,15 @@ class FrontierEngine:
         frontier_info = self.store.write_df(next_frontier, batch, "frontier")
         tables["frontier"] = frontier_info
         _mark("write_frontier", _t)
+        sliver_rows = sliver_bytes = None
+        if sliver_obs is not None:
+            try:
+                got = sliver_obs.get
+            except Py4JJavaError:
+                # AQE prunes an empty candidate set together with the
+                # probe's CollectMetrics: nothing was maybe-seen
+                got = {"rows": 0, "bytes": 0}
+            sliver_rows, sliver_bytes = int(got["rows"]), int(got["bytes"] or 0)
 
         metrics = {
             "batch": batch,
@@ -658,6 +605,11 @@ class FrontierEngine:
             # and/or the frontier write's rescue base) — both ran above
             "robots_blocked": int(blocked_obs.get["n"]) if blocked_obs else 0,
             "frontier_after": frontier_info["rows"],
+            # membership decisions and their inputs
+            "placement": self.placement,
+            "rescue": rescue,
+            "sliver_rows": sliver_rows,
+            "sliver_bytes": sliver_bytes,
             "wall_sec": round(time.time() - t0, 3),
             "phases": phases,
         }
@@ -678,4 +630,5 @@ class FrontierEngine:
         self.store.commit(batch, tables, metrics, config)
         if cfg.seen_compact_every and (batch + 1) % cfg.seen_compact_every == 0:
             self.store.compact_seen(self.spark, batch)
-        return self.store.manifest(batch), blob_map
+        self._sliver_bytes = sliver_bytes or 0
+        return self.store.manifest(batch)

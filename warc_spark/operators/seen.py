@@ -1,24 +1,28 @@
 """URL-seen set (SURVEY.md §2.B E4/E5): the frontier's membership state.
 
-Three layers, composed:
+The state is one ``(bucket, blob, n_items)`` row per url bucket (host-hash
+by default), built with ``applyInPandas`` so it is distributed and
+incrementally updatable. Spark's own ``DataFrame.stat.bloomFilter`` builds
+one driver-resident filter (rejected: 10^10 urls @ 1% fpp ≈ 12 GB on the
+driver); per-bucket blobs scale horizontally with the bucket count.
 
-1. **Exact oracle**: ``left_anti`` join against the seen table — always
-   correct, one shuffle on url. This is the correctness baseline and the
-   verifier for the probabilistic paths.
-2. **Partitioned Bloom blobs**: the 10^10-URL design. The seen set is held
-   as one Bloom bitmap *per host-hash bucket* (BinaryType blob per bucket,
-   built with ``applyInPandas``), so membership state is distributed,
-   incrementally mergeable (bitwise OR), and probed via a co-partitioned
-   (or broadcast, while small) join + vectorized numpy bit-test — never a
-   driver-side filter. Spark's own ``DataFrame.stat.bloomFilter`` builds one
-   driver-resident filter (rejected: 10^10 urls @ 1% fpp ≈ 12 GB on the
-   driver); per-bucket blobs scale horizontally with the bucket count.
-   Bloom guarantees no false negatives, so ``definitely_new`` is safe to
-   fetch directly; the ``maybe_seen`` remainder (~fpp of candidates) goes
-   through the exact anti-join — the expensive join shrinks by ~100x.
-3. **Cuckoo-filter fallback** (E5): same partitioned-blob layout but
-   supporting deletion (bucketed fingerprints), for recrawl semantics where
-   urls age out of the seen set.
+Two filters share that layout:
+
+1. **Partitioned Bloom blobs** (E4, append-only). No false negatives, so
+   ``definitely_new`` is safe to fetch directly; the ``maybe_seen``
+   remainder (~fpp of candidates plus true dupes) goes through an exact
+   rescue against the seen log — the expensive join shrinks by ~100x.
+2. **Partitioned cuckoo filter** (E5): bucketed uint16 fingerprints that
+   also support deletion, for recrawl semantics where urls age out.
+
+Every operation on a state *table* — probe, insert (the bloom OR-update /
+cuckoo insert) and cuckoo delete — is one plan:
+``urls.groupBy(bucket).cogroup(state.groupBy(bucket)).applyInPandas``.
+Both sides are hash-partitioned on bucket, so the state never collects to
+one node, and each blob crosses to Python once per bucket rather than once
+per candidate row (a partitioned set-containment semi-join, after LCJoin).
+While the whole bloom state is broadcast-sized the frontier instead probes
+a driver-held blob map broadcast to every task (``probe_with_map``).
 
 All hashing is seed-pinned (pandas siphash with fixed keys) so blobs built
 on any executor are identical.
@@ -32,13 +36,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
+    BooleanType,
     IntegerType,
     LongType,
     StructField,
     StructType,
 )
 
-BLOOM_SCHEMA = StructType(
+STATE_SCHEMA = StructType(
     [
         StructField("bucket", IntegerType(), False),
         StructField("blob", BinaryType(), False),
@@ -84,7 +89,100 @@ def _bit_positions(h1: np.ndarray, h2: np.ndarray, k: int, m_bits: int) -> np.nd
         )
 
 
-class BloomSeenSet:
+def _state_row(bucket, arr: np.ndarray, n_items) -> pd.DataFrame:
+    return pd.DataFrame(
+        {"bucket": [int(bucket)], "blob": [arr.tobytes()], "n_items": [int(n_items)]}
+    )
+
+
+class _PartitionedSet:
+    """The distributed plans shared by both filters. A subclass supplies
+    the per-bucket numpy kernels: ``_empty()`` (a fresh bucket),
+    ``_decode(blob)`` (a writable array), ``_add(arr, urls)`` (insert in
+    place, returns the count) and ``_test(arr, urls)`` (membership bits).
+
+    Parallelism note (VERDICT r3): the ``groupBy(bucket)`` caps table-side
+    tasks at ``n_buckets`` — at the documented 10^10-URL geometry (65k
+    buckets) that exceeds any cluster's core count, but do NOT ship the
+    sandbox default (64) at scale: size n_buckets >= a few x total
+    executor cores."""
+
+    def __init__(self, n_buckets: int, bucket_key: str):
+        assert bucket_key in ("host", "url")
+        self.n_buckets = n_buckets
+        self.bucket_key = bucket_key
+
+    def __getstate__(self) -> dict:
+        # the kernels ship to executors by value and need only the
+        # geometry; a function a caller attached to the instance (such as
+        # a timing wrapper holding the SparkContext) stays on the driver
+        return {k: v for k, v in vars(self).items() if not callable(v)}
+
+    def _keyed(self, df: DataFrame, url_col: str) -> DataFrame:
+        return df.withColumn(
+            "_bucket", bucket_of(F.col(url_col), self.n_buckets, self.bucket_key)
+        )
+
+    @staticmethod
+    def _cogroup(keyed: DataFrame, state: DataFrame, fn, schema) -> DataFrame:
+        """The one table-side plan: ``fn(rows, state_rows)`` per bucket."""
+        return (
+            keyed.groupBy("_bucket")
+            .cogroup(state.groupBy("bucket"))
+            .applyInPandas(fn, schema)
+        )
+
+    def build_blobs(self, urls: DataFrame, url_col: str = "url") -> DataFrame:
+        """urls -> one (bucket, blob, n_items) row per bucket. One shuffle
+        on bucket; the kernel is vectorized numpy inside applyInPandas."""
+
+        def build(pdf: pd.DataFrame) -> pd.DataFrame:
+            arr = self._empty()
+            return _state_row(pdf["_bucket"].iloc[0], arr, self._add(arr, pdf[url_col]))
+
+        return (
+            self._keyed(urls.select(url_col), url_col)
+            .groupBy("_bucket")
+            .applyInPandas(build, STATE_SCHEMA)
+        )
+
+    def insert(self, state: DataFrame, urls: DataFrame, url_col: str = "url") -> DataFrame:
+        """Incremental state update: add urls to the existing per-bucket
+        state (bloom: bitwise OR; cuckoo: fingerprint insert). Buckets
+        absent from ``state`` start empty; buckets with no new urls pass
+        through unchanged."""
+
+        def insert(new: pd.DataFrame, old: pd.DataFrame) -> pd.DataFrame:
+            if new.empty:
+                return old
+            if old.empty:
+                arr, n = self._empty(), 0
+            else:
+                arr, n = self._decode(old["blob"].iloc[0]), old["n_items"].iloc[0]
+            n += self._add(arr, new[url_col])
+            return _state_row(new["_bucket"].iloc[0], arr, n)
+
+        keyed = self._keyed(urls.select(url_col), url_col)
+        return self._cogroup(keyed, state, insert, STATE_SCHEMA)
+
+    def probe(self, candidates: DataFrame, state: DataFrame, url_col: str = "url") -> DataFrame:
+        """Adds ``maybe_seen: boolean`` to every candidate row."""
+
+        def test(cands: pd.DataFrame, st: pd.DataFrame) -> pd.DataFrame:
+            out = cands.drop(columns="_bucket")
+            hit = np.zeros(len(out), dtype=bool)
+            if len(out) and len(st):
+                hit = self._test(self._decode(st["blob"].iloc[0]), out[url_col])
+            out["maybe_seen"] = hit
+            return out
+
+        schema = StructType(
+            list(candidates.schema.fields) + [StructField("maybe_seen", BooleanType())]
+        )
+        return self._cogroup(self._keyed(candidates, url_col), state, test, schema)
+
+
+class BloomSeenSet(_PartitionedSet):
     """Partitioned-Bloom membership state.
 
     Parameters are explicit: ``m_bits`` per bucket and ``k`` hashes; at
@@ -101,128 +199,36 @@ class BloomSeenSet:
         bucket_key: str = "host",
     ):
         assert m_bits % 8 == 0
-        assert bucket_key in ("host", "url")
-        self.n_buckets = n_buckets
+        super().__init__(n_buckets, bucket_key)
         self.m_bits = m_bits
         self.k = k
-        self.bucket_key = bucket_key
 
-    # -- build ----------------------------------------------------------
-    def build_blobs(self, urls: DataFrame, url_col: str = "url") -> DataFrame:
-        """urls -> one (bucket, blob, n_items) row per bucket. One shuffle
-        on bucket; blob build is vectorized numpy inside applyInPandas."""
-        m_bits, k = self.m_bits, self.k
+    def _empty(self) -> np.ndarray:
+        return np.zeros(self.m_bits // 8, dtype=np.uint8)
 
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            arr = np.zeros(m_bits // 8, dtype=np.uint8)
-            h1, h2 = _hash2(pdf["_url"])
-            pos = _bit_positions(h1, h2, k, m_bits).ravel()
-            np.bitwise_or.at(arr, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-            return pd.DataFrame(
-                {
-                    "bucket": [int(pdf["_bucket"].iloc[0])],
-                    "blob": [arr.tobytes()],
-                    "n_items": [len(pdf)],
-                }
-            )
+    def _decode(self, blob) -> np.ndarray:
+        return np.frombuffer(bytes(blob), dtype=np.uint8).copy()
 
-        return (
-            urls.select(
-                F.col(url_col).alias("_url"),
-                bucket_of(F.col(url_col), self.n_buckets, self.bucket_key).alias("_bucket"),
-            )
-            .groupBy("_bucket")
-            .applyInPandas(build, BLOOM_SCHEMA)
-        )
+    def _positions(self, urls: pd.Series) -> np.ndarray:
+        h1, h2 = _hash2(urls)
+        return _bit_positions(h1, h2, self.k, self.m_bits)
 
-    def compact(self, blobs: DataFrame) -> DataFrame:
-        """OR-merge a blob table that may hold several rows per bucket
-        (e.g. the union of many checkpointed deltas) into one row/bucket.
-        One shuffle on bucket; the OR is vectorized numpy."""
-        m_bytes = self.m_bits // 8
+    def _add(self, arr: np.ndarray, urls: pd.Series) -> int:
+        pos = self._positions(urls).ravel()
+        np.bitwise_or.at(arr, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
+        return len(urls)
 
-        def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-            acc = np.zeros(m_bytes, dtype=np.uint8)
-            n = 0
-            for blob, cnt in zip(pdf["blob"], pdf["n_items"]):
-                if blob is not None:
-                    acc |= np.frombuffer(bytes(blob), dtype=np.uint8)
-                    n += int(cnt)
-            return pd.DataFrame(
-                {"bucket": [int(pdf["bucket"].iloc[0])], "blob": [acc.tobytes()], "n_items": [n]}
-            )
-
-        return blobs.groupBy("bucket").applyInPandas(merge, BLOOM_SCHEMA)
-
-    def merge_blobs(self, a: DataFrame, b: DataFrame) -> DataFrame:
-        """Incremental state update: bitwise-OR blobs bucket-wise (full
-        outer on bucket; missing side contributes an empty bitmap)."""
-        return self.compact(a.unionByName(b))
-
-    # -- probe ----------------------------------------------------------
-    def probe(
-        self,
-        candidates: DataFrame,
-        blobs: DataFrame,
-        url_col: str = "url",
-        broadcast: bool = True,
-    ) -> DataFrame:
-        """Adds ``maybe_seen: boolean``. Join on bucket (``broadcast=True``
-        while the blob table is small; with ``broadcast=False`` both sides
-        hash-partition on bucket so the join is co-located and the blob
-        state NEVER collects to one node — the 10^10-URL path), then numpy
-        bit-test per batch.
-
-        Parallelism note (VERDICT r3): the ``groupBy(bucket)`` caps probe
-        tasks at ``n_buckets`` — at the documented 10^10-URL geometry
-        (65k buckets) that exceeds any cluster's core count, but do NOT
-        ship the sandbox default (64) at scale: size n_buckets >= a few x
-        total executor cores."""
-        m_bits, k = self.m_bits, self.k
-
-        def test(pdf: pd.DataFrame) -> pd.DataFrame:
-            out = np.zeros(len(pdf), dtype=bool)
-            if len(pdf):
-                blob = pdf["blob"].iloc[0]
-                if blob is not None:
-                    arr = np.frombuffer(bytes(blob), dtype=np.uint8)
-                    h1, h2 = _hash2(pdf[url_col])
-                    pos = _bit_positions(h1, h2, k, m_bits)
-                    bits = (arr[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0
-                    out = bits.all(axis=1)
-            res = pdf.drop(columns=["blob", "n_items"]).copy()
-            res["maybe_seen"] = out
-            return res
-
-        from pyspark.sql.types import BooleanType
-
-        with_bucket = candidates.withColumn(
-            "bucket", bucket_of(F.col(url_col), self.n_buckets, self.bucket_key)
-        )
-        out_schema = StructType(
-            list(with_bucket.schema.fields) + [StructField("maybe_seen", BooleanType())]
-        )
-        blob_side = F.broadcast(blobs) if broadcast else blobs
-        joined = with_bucket.join(blob_side, on="bucket", how="left")
-        return (
-            joined.groupBy("bucket")
-            .applyInPandas(test, out_schema)
-            .drop("bucket")
-        )
+    def _test(self, arr: np.ndarray, urls: pd.Series) -> np.ndarray:
+        pos = self._positions(urls)
+        return ((arr[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0).all(axis=1)
 
     # -- broadcast-map probe (the small-state fast path) -----------------
-    def collect_blob_map(self, blobs: DataFrame) -> dict[int, bytes]:
-        """Materialize the blob table as a driver dict {bucket: blob}. Used
-        while total blob bytes are broadcast-sized (sandbox / small-cluster
-        path); at 10^10-URL scale ``probe`` keeps the state distributed."""
-        return {int(r["bucket"]): bytes(r["blob"]) for r in blobs.collect()}
-
     @staticmethod
     def merge_blob_map(
         blob_map: dict[int, bytes], new_blobs_rows: list
     ) -> dict[int, bytes]:
         """Driver-side incremental OR of freshly-built blobs into the map
-        (mirrors merge_blobs; the written state stays distributed)."""
+        (the written state stays distributed)."""
         out = dict(blob_map)
         for r in new_blobs_rows:
             b = int(r["bucket"])
@@ -240,9 +246,8 @@ class BloomSeenSet:
         self, candidates: DataFrame, blob_map_bc, url_col: str = "url"
     ) -> DataFrame:
         """Adds ``maybe_seen`` via a *broadcast* of the blob map — zero
-        shuffle of the candidate side (vs ``probe``'s co-partitioned join).
+        shuffle of the candidate side (vs ``probe``'s cogroup).
         ``blob_map_bc`` is a ``sc.broadcast({bucket: blob_bytes})``."""
-        m_bits, k = self.m_bits, self.k
 
         def test(url: pd.Series, bucket: pd.Series) -> pd.Series:
             mp = blob_map_bc.value
@@ -250,16 +255,10 @@ class BloomSeenSet:
             if mp and len(url):
                 for b, grp in url.groupby(bucket.to_numpy()):
                     blob = mp.get(int(b))
-                    if blob is None:
-                        continue
-                    arr = np.frombuffer(blob, dtype=np.uint8)
-                    h1, h2 = _hash2(grp)
-                    pos = _bit_positions(h1, h2, k, m_bits)
-                    bits = (arr[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0
-                    out.loc[grp.index] = bits.all(axis=1)
+                    if blob is not None:
+                        arr = np.frombuffer(blob, dtype=np.uint8)
+                        out.loc[grp.index] = self._test(arr, grp)
             return out
-
-        from pyspark.sql.types import BooleanType
 
         udf = F.pandas_udf(test, BooleanType())
         return candidates.withColumn(
@@ -267,53 +266,17 @@ class BloomSeenSet:
             udf(F.col(url_col), bucket_of(F.col(url_col), self.n_buckets, self.bucket_key)),
         )
 
-    def filter_new(
-        self,
-        candidates: DataFrame,
-        blobs: DataFrame | None,
-        seen_exact: DataFrame | None,
-        url_col: str = "url",
-    ) -> DataFrame:
-        """The composed scale path: bloom-prefilter, then exact anti-join
-        only for the maybe-seen sliver. With no blobs yet, pure exact path.
-        Result: candidate rows that are definitely not in the seen set."""
-        if blobs is None:
-            if seen_exact is None:
-                return candidates
-            return candidates.join(
-                seen_exact.select(F.col(url_col)), on=url_col, how="left_anti"
-            )
-        probed = self.probe(candidates, blobs, url_col)
-        definitely_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-        maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-        if seen_exact is not None:
-            rescued = maybe.join(
-                seen_exact.select(F.col(url_col)), on=url_col, how="left_anti"
-            )
-            return definitely_new.unionByName(rescued)
-        return definitely_new
-
-
-def exact_new_urls(
-    candidates: DataFrame, seen: DataFrame, url_col: str = "url"
-) -> DataFrame:
-    """The exact-oracle membership filter: one left_anti shuffle join."""
-    return candidates.join(seen.select(F.col(url_col)), on=url_col, how="left_anti")
-
 
 # ---------------------------------------------------------------------------
 # Cuckoo filter (deletion-capable fallback, E5)
 # ---------------------------------------------------------------------------
 
-CUCKOO_SCHEMA = BLOOM_SCHEMA  # same (bucket, blob, n_items) layout
 
-
-class CuckooSeenSet:
-    """Partitioned cuckoo filter: per host-hash bucket, a table of
-    ``n_slots`` uint16 fingerprints in ``buckets_per_table x 4`` layout.
-    Supports delete (recrawl). Kernel is numpy; the insert loop relocates
-    at most ``max_kicks`` times per item (batch-level Python, not per-row
-    Spark)."""
+class CuckooSeenSet(_PartitionedSet):
+    """Partitioned cuckoo filter: per url bucket, a table of
+    ``table_buckets x 4`` uint16 fingerprints. Supports delete (recrawl).
+    Kernel is numpy; the insert loop relocates at most ``max_kicks`` times
+    per item (batch-level Python, not per-row Spark)."""
 
     # bucket-derivation versioning (ADVICE r4): checkpointed cuckoo_state
     # blobs are only probe-compatible with the scheme that wrote them.
@@ -331,13 +294,11 @@ class CuckooSeenSet:
         max_kicks: int = 200,
         bucket_key: str = "host",
     ):
-        assert bucket_key in ("host", "url")
         # the xor alt-index is only an involution for power-of-two tables
         assert table_buckets & (table_buckets - 1) == 0
-        self.n_buckets = n_buckets
+        super().__init__(n_buckets, bucket_key)
         self.table_buckets = table_buckets
         self.max_kicks = max_kicks
-        self.bucket_key = bucket_key
 
     def _hash_fp_idx(self, urls: pd.Series) -> tuple[np.ndarray, np.ndarray]:
         """ONE siphash pass per batch (r4: was two): fingerprint from the
@@ -350,12 +311,6 @@ class CuckooSeenSet:
         fp = np.where(fp == 0, np.uint16(1), fp)  # 0 = empty slot
         idx = ((h >> np.uint64(16)) % np.uint64(self.table_buckets)).astype(np.int64)
         return fp, idx
-
-    def _fingerprint(self, urls: pd.Series) -> np.ndarray:
-        return self._hash_fp_idx(urls)[0]
-
-    def _index(self, urls: pd.Series) -> np.ndarray:
-        return self._hash_fp_idx(urls)[1]
 
     def _fp_lut(self) -> np.ndarray:
         """hash(fingerprint) for every possible uint16 fingerprint — 512 KiB
@@ -377,8 +332,15 @@ class CuckooSeenSet:
             np.int64
         )
 
-    def _empty_table(self) -> np.ndarray:
+    def _empty(self) -> np.ndarray:
         return np.zeros((self.table_buckets, 4), dtype=np.uint16)
+
+    def _decode(self, blob) -> np.ndarray:
+        return (
+            np.frombuffer(bytes(blob), dtype=np.uint16)
+            .reshape(self.table_buckets, 4)
+            .copy()
+        )
 
     def _kick_insert(self, table: np.ndarray, fp: int, start: int, rng, lut) -> None:
         """Classic cuckoo relocation for one item whose both buckets are
@@ -440,169 +402,39 @@ class CuckooSeenSet:
                 self._kick_insert(table, int(fps[j]), int(idxs[j]), rng, lut)
         return n
 
-    def _place_all_loop(self, table: np.ndarray, fps: np.ndarray, idxs: np.ndarray) -> int:
-        """Reference per-item placement (the pre-r4 path), kept as the
-        equivalence + speedup baseline for tests."""
-        import random
-
-        rng = random.Random(42)
-        lut = self._fp_lut()
-        alts = self._alt_index(idxs, fps)
-        inserted = 0
-        for fp, i1, i2 in zip(fps, idxs, alts):
-            fp = np.uint16(fp)
-            placed = False
-            for i in (i1, i2):
-                row = table[i]
-                empty = np.flatnonzero(row == 0)
-                if empty.size:
-                    table[i, empty[0]] = fp
-                    placed = True
-                    break
-            if not placed:
-                self._kick_insert(table, int(fp), int(i1), rng, lut)
-            inserted += 1
-        return inserted
-
-    def _insert_all(self, table: np.ndarray, urls: pd.Series) -> int:
+    def _add(self, table: np.ndarray, urls: pd.Series) -> int:
         fps, idxs = self._hash_fp_idx(urls)
         return self._place_all(table, fps, idxs)
 
-    def _insert_all_loop(self, table: np.ndarray, urls: pd.Series) -> int:
+    def _test(self, table: np.ndarray, urls: pd.Series) -> np.ndarray:
         fps, idxs = self._hash_fp_idx(urls)
-        return self._place_all_loop(table, fps, idxs)
-
-    def build_blobs(self, urls: DataFrame, url_col: str = "url") -> DataFrame:
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            table = self._empty_table()
-            n = self._insert_all(table, pdf["_url"])
-            return pd.DataFrame(
-                {
-                    "bucket": [int(pdf["_bucket"].iloc[0])],
-                    "blob": [table.tobytes()],
-                    "n_items": [n],
-                }
-            )
-
-        return (
-            urls.select(
-                F.col(url_col).alias("_url"),
-                bucket_of(F.col(url_col), self.n_buckets, self.bucket_key).alias("_bucket"),
-            )
-            .groupBy("_bucket")
-            .applyInPandas(build, CUCKOO_SCHEMA)
+        alts = self._alt_index(idxs, fps)
+        return (table[idxs] == fps[:, None]).any(axis=1) | (
+            (table[alts] == fps[:, None]).any(axis=1)
         )
 
-    def insert_urls(
-        self, blobs: DataFrame, urls: DataFrame, url_col: str = "url"
-    ) -> DataFrame:
-        """Incremental state update: insert urls into EXISTING per-bucket
-        tables (full outer on bucket — new buckets start empty). This is
-        the cuckoo analog of BloomSeenSet.merge_blobs and what makes the
-        filter usable as mutable frontier membership state."""
-        tb = self.table_buckets
+    def _remove(self, table: np.ndarray, urls: pd.Series) -> int:
+        fps, idxs = self._hash_fp_idx(urls)
+        alts = self._alt_index(idxs, fps)
+        removed = 0
+        for fp, i1, i2 in zip(fps, idxs, alts):
+            for i in (i1, i2):
+                hit = np.flatnonzero(table[i] == fp)
+                if hit.size:
+                    table[i, hit[0]] = 0
+                    removed += 1
+                    break
+        return removed
 
-        def insert(pdf: pd.DataFrame) -> pd.DataFrame:
-            blob = next((b for b in pdf["blob"] if b is not None), None)
-            table = (
-                np.frombuffer(bytes(blob), dtype=np.uint16).reshape(tb, 4).copy()
-                if blob is not None
-                else self._empty_table()
-            )
-            todo = pdf[pdf["_url"].notna()]["_url"]
-            n = int(next((x for x in pdf["n_items"] if x is not None and x == x), 0) or 0)
-            if len(todo):
-                n += self._insert_all(table, todo)
-            return pd.DataFrame(
-                {"bucket": [int(pdf["bucket"].iloc[0])], "blob": [table.tobytes()], "n_items": [n]}
-            )
-
-        with_bucket = urls.select(
-            F.col(url_col).alias("_url"),
-            bucket_of(F.col(url_col), self.n_buckets, self.bucket_key).alias("bucket"),
-        )
-        joined = blobs.join(with_bucket, on="bucket", how="full")
-        return joined.groupBy("bucket").applyInPandas(insert, CUCKOO_SCHEMA)
-
-    def delete_urls(self, blobs: DataFrame, urls: DataFrame, url_col: str = "url") -> DataFrame:
+    def delete(self, state: DataFrame, urls: DataFrame, url_col: str = "url") -> DataFrame:
         """Remove urls from the filter (the operation Bloom cannot do)."""
-        tb = self.table_buckets
 
-        def delete(pdf: pd.DataFrame) -> pd.DataFrame:
-            blob = pdf["blob"].iloc[0]
-            table = (
-                np.frombuffer(bytes(blob), dtype=np.uint16).reshape(tb, 4).copy()
-                if blob is not None
-                else self._empty_table()
-            )
-            todel = pdf[pdf["_url"].notna()]["_url"]
-            removed = 0
-            if len(todel):
-                fps = self._fingerprint(todel)
-                idxs = self._index(todel)
-                alts = self._alt_index(idxs, fps)
-                for fp, i1, i2 in zip(fps, idxs, alts):
-                    for i in (i1, i2):
-                        hit = np.flatnonzero(table[i] == fp)
-                        if hit.size:
-                            table[i, hit[0]] = 0
-                            removed += 1
-                            break
-            n = int(pdf["n_items"].iloc[0] or 0) - removed
-            return pd.DataFrame(
-                {"bucket": [int(pdf["bucket"].iloc[0])], "blob": [table.tobytes()], "n_items": [n]}
-            )
+        def delete(gone: pd.DataFrame, old: pd.DataFrame) -> pd.DataFrame:
+            if gone.empty or old.empty:
+                return old
+            table = self._decode(old["blob"].iloc[0])
+            removed = self._remove(table, gone[url_col])
+            return _state_row(old["bucket"].iloc[0], table, old["n_items"].iloc[0] - removed)
 
-        with_bucket = urls.select(
-            F.col(url_col).alias("_url"),
-            bucket_of(F.col(url_col), self.n_buckets, self.bucket_key).alias("bucket"),
-        )
-        joined = blobs.join(with_bucket, on="bucket", how="left")
-        return joined.groupBy("bucket").applyInPandas(delete, CUCKOO_SCHEMA)
-
-    def probe(
-        self,
-        candidates: DataFrame,
-        blobs: DataFrame,
-        url_col: str = "url",
-        broadcast: bool = True,
-    ) -> DataFrame:
-        """Adds ``maybe_seen``. Mirrors ``BloomSeenSet.probe``'s placement
-        contract: ``broadcast=True`` ships the fingerprint tables to every
-        task (fine while small); ``broadcast=False`` co-partitions BOTH
-        sides on bucket so the state — which for the recrawl backend is
-        *bigger* than bloom bitmaps (4x uint16 slots per table bucket) —
-        never collects to one node (the 10^10-URL configuration)."""
-        tb = self.table_buckets
-
-        def test(pdf: pd.DataFrame) -> pd.DataFrame:
-            out = np.zeros(len(pdf), dtype=bool)
-            if len(pdf):
-                blob = pdf["blob"].iloc[0]
-                if blob is not None:
-                    table = np.frombuffer(bytes(blob), dtype=np.uint16).reshape(tb, 4)
-                    fps = self._fingerprint(pdf[url_col])
-                    idxs = self._index(pdf[url_col])
-                    alts = self._alt_index(idxs, fps)
-                    out = ((table[idxs] == fps[:, None]).any(axis=1)) | (
-                        (table[alts] == fps[:, None]).any(axis=1)
-                    )
-            res = pdf.drop(columns=["blob", "n_items"]).copy()
-            res["maybe_seen"] = out
-            return res
-
-        from pyspark.sql.types import BooleanType
-
-        with_bucket = candidates.withColumn(
-            "bucket", bucket_of(F.col(url_col), self.n_buckets, self.bucket_key)
-        )
-        out_schema = StructType(
-            list(with_bucket.schema.fields) + [StructField("maybe_seen", BooleanType())]
-        )
-        blob_side = F.broadcast(blobs) if broadcast else blobs
-        return (
-            with_bucket.join(blob_side, on="bucket", how="left")
-            .groupBy("bucket")
-            .applyInPandas(test, out_schema)
-            .drop("bucket")
-        )
+        keyed = self._keyed(urls.select(url_col), url_col)
+        return self._cogroup(keyed, state, delete, STATE_SCHEMA)

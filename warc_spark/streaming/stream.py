@@ -200,7 +200,13 @@ def stream_archive_export(
     so the epoch directory is cleared before a rerun writes — per-epoch
     idempotence on top of deterministic record ids. Trigger.AvailableNow
     + the streaming checkpoint make repeated invocations drain only NEW
-    input files (the restartable backfill harness)."""
+    input files (the restartable backfill harness).
+
+    ``out_dir`` must be a local filesystem path that the driver and every
+    executor see (one host, or a shared mount): the per-epoch clear runs
+    ``os``/``shutil`` on the driver and the ``write_warc`` sink opens its
+    part files with plain ``open`` on the executors, so ``s3a://`` or
+    ``hdfs://`` URIs are not supported."""
     if kind not in ("wet", "wat"):
         raise ValueError(f"kind must be wet|wat, got {kind!r}")
 
