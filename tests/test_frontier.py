@@ -89,6 +89,18 @@ def plans_of(manifests, key):
     return {m["metrics"][key] for m in manifests}
 
 
+def assert_sliver_is_dupes(manifests, sim, placement):
+    """The manifest records the placement and the maybe-seen sliver. With
+    the filter far from full (a few hundred urls) it has no false
+    positives, so the sliver is exactly the emitted candidates already
+    seen, which the simulator counts."""
+    assert plans_of(manifests, "placement") == {placement}
+    assert plans_of(manifests, "rescue") == {"broadcast"}
+    dupes = [sm["dupes"] for sm in sim.metrics]
+    assert [m["metrics"]["sliver_rows"] for m in manifests] == dupes
+    assert sum(dupes) > 0
+
+
 def run_engine(spark, pages_df, seeds_df, tmp_path, cfg=None, robots=None, budgets=None,
                resume=False, store=None):
     store = store or SnapStore(str(tmp_path / "snap"))
@@ -185,28 +197,20 @@ class TestCrawlOracle:
         for m, sm in zip(manifests, sim.metrics):
             for key in ("scheduled", "found", "missing", "frontier_after"):
                 assert m["metrics"][key] == sm[key], (key, m["metrics"], sm)
+        assert_sliver_is_dupes(manifests, sim, "map")
 
-    @pytest.mark.parametrize(
-        "threshold,placement", [(None, "map"), (64 << 10, "table")], ids=["map", "table"]
-    )
     def test_sliver_matches_simulator_dupes(
-        self, spark, pages_df, pages_pdf, seeds_df, tmp_path, threshold, placement
+        self, spark, pages_df, pages_pdf, seeds_df, tmp_path
     ):
-        """The manifest records the placement and the maybe-seen sliver.
-        With 1 MiB of bloom state for a few hundred urls the filter has no
-        false positives, so the sliver is exactly the emitted candidates
-        already seen, which the simulator counts."""
-        cfg = FrontierConfig(max_batches=4, default_budget=4,
+        """The same crawl and sliver on the table placement (1 MiB of
+        bloom state over a 64 KiB broadcast budget)."""
+        cfg = FrontierConfig(max_batches=3, default_budget=4,
                              bloom_buckets=8, bloom_bits=1 << 20)
-        with broadcast_threshold(spark, threshold):
+        with broadcast_threshold(spark, 64 << 10):
             store, manifests = run_engine(spark, pages_df, seeds_df, tmp_path, cfg)
-        sim = simulate_crawl(pages_pdf, seeds_list(seeds_df), default_budget=4, max_batches=4)
+        sim = simulate_crawl(pages_pdf, seeds_list(seeds_df), default_budget=4, max_batches=3)
         assert collect_batches(store, spark, len(manifests)) == sim.batches
-        assert plans_of(manifests, "placement") == {placement}
-        assert plans_of(manifests, "rescue") == {"broadcast"}
-        dupes = [sm["dupes"] for sm in sim.metrics]
-        assert [m["metrics"]["sliver_rows"] for m in manifests] == dupes
-        assert sum(dupes) > 0
+        assert_sliver_is_dupes(manifests, sim, "table")
 
     @pytest.mark.parametrize(
         "threshold,bits,placement", [(-1, 1 << 12, "table"), (8, 1 << 3, "map")],
